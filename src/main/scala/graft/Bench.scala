@@ -356,6 +356,9 @@ object Bench {
     // fingerprint (the seedBfs discipline) — its three consumers time
     // the rollups over the converged labels, not the 7-superstep build
     "graph_modularity", "graph_conductance",
+    // round 18: the near-dup stream's verify tail reads the persisted
+    // shingle and signature artifacts through Dedup.verifyCandidates
+    "stream_neardup_minhash",
     // round 14 (re-shaped r16): the resource-audit growth certificate
     // is cached per (fixture fingerprints, panel plan hashes) — a
     // bench invocation reads measurement.csv unless a plan changed

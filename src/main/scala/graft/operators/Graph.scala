@@ -508,10 +508,13 @@ object Graph {
     *
     * Round shape: frontier ⋈ edges → min-combine per dst → LEFT ANTI
     * against settled (only never-seen nodes enter the next frontier).
-    * Both the frontier and the settled table are `localCheckpoint`ed
-    * per round — the lineage-truncation discipline of every iterative
-    * op here (pageRank/k-core/components); without it round r replays
-    * rounds 1..r−1 and the plan grows without bound. At 100 TB: edges
+    * Each round's frontier is `localCheckpoint`ed — the
+    * lineage-truncation discipline of every iterative op here
+    * (pageRank/k-core/components); without it round r replays rounds
+    * 1..r−1 and the plan grows without bound. Settled is not
+    * re-checkpointed: it is the union of those checkpointed frontier
+    * legs, one leg per round, so its plan stays bounded by the wave
+    * count with no lineage to truncate. At 100 TB: edges
     * are the one big table (scanned once per round, pre-partitioned by
     * src), the frontier is transient and wave-sized, settled is
     * node-linear and append-only — the Flink delta-iteration /

@@ -27,10 +27,15 @@ object StreamingOps {
     * vs parallelism), not a semantic one. The bench streams are
     * bounded test data where 32 store instances are pure overhead:
     * measured at sf0.1/local[32], the stream-stream join runs 11.2 s
-    * with 32 state partitions and 3.8 s with 8, identical results. A
-    * 100 TB ingest sizes this to throughput (hundreds); these runs
-    * size it to the test stream. The conf is set around the streaming
-    * run and restored after, like the RocksDB provider conf. */
+    * with 32 state partitions and 3.8 s with 8, identical results.
+    * That timing was taken while every state-store commit still forked
+    * `readlink` processes under Spark's FileContext checkpoint manager
+    * (see graft.streaming.LocalCheckpointFileManager), which inflated
+    * the per-instance commit cost it weighs; it has not been re-measured
+    * since, and the value stays 8. A 100 TB ingest sizes this
+    * to throughput (hundreds); these runs size it to the test stream.
+    * The conf is set around the streaming run and restored after, like
+    * the RocksDB provider conf. */
   private val statePartitions = 8
 
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
@@ -738,11 +743,14 @@ object StreamingOps {
         .outputMode(OutputMode.Update).start()
       q.processAllAvailable(); q.stop()
       // converged state = last update per text (n_copies only grows)
-      spark.table(name)
+      val result = spark.table(name)
         .groupBy(col("norm"))
         .agg(max_by(struct(col("doc_id"), col("n_copies")), col("n_copies")).as("r"))
         .select(col("r.doc_id").as("doc_id"), col("r.n_copies").as("n_copies"))
         .orderBy(col("doc_id"))
+      // the analyzed plan already holds the memory sink: the view can go
+      spark.catalog.dropTempView(name)
+      result
     } finally {
       prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
     }

@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   * Three injection points: the [[ReplaceHofCosine]] optimizer rule,
   * the `graft_cosine` SQL function, and the [[AsOfStrategy]] planner
   * strategy (the whole-operator extension — see plans/AsOfJoin.scala).
+  * Every graft session loads this class, so it also selects
+  * [[graft.streaming.LocalCheckpointFileManager]] for streaming
+  * checkpoints on the SparkContext's Hadoop configuration.
   *
   * [[ReplaceHofCosine]] — users write
   * the portable higher-order-function cosine (`Vectors.cosine`:
@@ -25,6 +28,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // local streaming checkpoints through the FileSystem API (no process
+    // fork per rename) — see streaming/LocalCheckpointFileManager.scala.
+    // Extensions are applied once the session's SparkContext is active,
+    // so this returns that context; a conf the user set is kept.
+    graft.streaming.LocalCheckpointFileManager.install(
+      org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
     ext.injectOptimizerRule(_ => ReplaceHofCosine)
     // transparent materialized-view rewrite (exact-match view catalog,
     // fingerprint-fresh by construction) — see plans/MatviewRewrite.scala

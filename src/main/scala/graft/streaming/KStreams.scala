@@ -20,6 +20,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state is O(1) (single latest record). A production deployment swaps
   * the file source for `format("kafka")` + the RocksDB state store
   * provider — one config line each, same topology code.
+  *
+  * Checkpoints: a graft session writes `file:` checkpoints (offset
+  * and commit logs, state-store files) through
+  * [[LocalCheckpointFileManager]], i.e. Spark's FileSystem-based
+  * manager, because Spark's default FileContext manager forks a
+  * `readlink` process per rename on a local path without libhadoop
+  * (on a 4-core host the median state commit was ~450 ms and each
+  * offset/commit-log write ~100 ms, against ~20 ms each without the
+  * forks). HDFS and object-store checkpoints keep Spark's default.
   */
 object KStreams {
 

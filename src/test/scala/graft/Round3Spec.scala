@@ -121,6 +121,10 @@ class Round3Spec extends AnyFunSuite {
     val batch = SparkEntry.queries("dedup_normalized")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(streamed.nonEmpty && streamed == batch)
+    // the memory sink's temp view is dropped once the result is built
+    val leftover = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("dedup_corpus_"))
+    assert(leftover.isEmpty, s"sink views left: ${leftover.map(_.name).mkString(", ")}")
   }
 
   test("int8 quantization keeps cosine fidelity and bounded element error") {
